@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print formatted physical plans for selected queries —
   * used to audit pushdown (PushedFilters/ReadSchema at the parquet scan),
   * WholeStageCodegen spans, and join strategies.
@@ -14,13 +12,9 @@ object Explain {
     val names = if (args.length > 1) args.tail.toSeq
       else Seq("q_filter", "q_agg", "q_join_revenue", "q_roll_mean",
         "q_asof", "q_simsearch_topk", "q_minhash_pairs")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the measurement session: its plans carry GraftExtensions' rules
+    // (SimplifyKernelPredicates) and SQL-registered kernels
+    val spark = core.Measure.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     names.foreach { n =>
       println(s"\n========== $n ==========")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

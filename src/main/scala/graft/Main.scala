@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException}
 
 import graft.streaming.Topology
 
@@ -17,7 +17,8 @@ import graft.streaming.Topology
   * }}}
   *
   * Batch mode writes every sink topic under `--output`; stream mode starts
-  * one streaming query per sink and blocks until termination. Flags
+  * one streaming query per sink and blocks until the first one ends,
+  * then stops the others and exits nonzero if any failed. Flags
   * default from the YAML `config:` section (`mode`, `output`,
   * `checkpoint`), so a fully self-describing app file needs only
   * `--config`.
@@ -137,7 +138,27 @@ object Main {
         master = args.overrides.getOrElse("master",
           sys.env.getOrElse("SPARK_MASTER", "local[*]")))
       .getOrCreate()
-    val queries = run(spark, topo, args.overrides)
-    queries.foreach(_.awaitTermination())
+    val code = awaitTopology(spark, run(spark, topo, args.overrides))
+    if (code != 0) sys.exit(code)
+  }
+
+  /** Block until the first of `queries` terminates, then stop the rest:
+    * a topology never keeps running with one query dead. Returns the
+    * process exit code, 1 when any query failed and 0 otherwise (no
+    * queries, as in batch mode, returns at once). Terminations of other
+    * queries on the session are ignored. */
+  def awaitTopology(spark: SparkSession, queries: Seq[StreamingQuery]): Int = {
+    val streams = spark.streams
+    // reset before the check: a query that ends after the reset wakes
+    // awaitAnyTermination, one that ended before it fails the check
+    while ({ streams.resetTerminated()
+      queries.nonEmpty && queries.forall(_.isActive) })
+      try streams.awaitAnyTermination()
+      catch { case _: StreamingQueryException => } // read per query below
+    queries.foreach(_.stop())
+    val failed = queries.filter(_.exception.nonEmpty)
+    failed.foreach(q => System.err.println(
+      s"graft.Main: query ${q.name} (${q.id}) failed: ${q.exception.get}"))
+    if (failed.nonEmpty) 1 else 0
   }
 }

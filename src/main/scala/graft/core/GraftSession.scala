@@ -13,6 +13,14 @@ import org.apache.spark.sql.SparkSession
   *  - `nanosAsLong` parquet compatibility (the corpus's TIMESTAMP(NANOS)
   *    columns; `Tables.table` rebuilds µs timestamps on top).
   *  - graft's native expressions registered for SQL via GraftExtensions.
+  *  - `file:` paths through [[LocalFs]] ([[localFs]]), for local masters
+  *    only. Stock Hadoop without a native libhadoop starts a shell
+  *    process per checkpoint rename and create; a streaming topology
+  *    writing its checkpoints and sinks to the local disk paid most of
+  *    its per-trigger state commit in those processes. A cluster master
+  *    is left alone: executors may resolve filesystem classes before
+  *    the application jar is on their class path, and a cluster's
+  *    checkpoints live on a distributed store anyway.
   *
   * `shufflePartitions` = 0 (the default) derives the setting where it
   * can be known at build time: a `local[N]` master gets N, `local[*]`
@@ -46,12 +54,25 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config(localFs(master))
     val withMaster = if (master.nonEmpty) b.master(master) else b
     val derived = derivePartitions(master, shufflePartitions)
     if (derived > 0)
       withMaster.config("spark.sql.shuffle.partitions", derived.toString)
     else withMaster
   }
+
+  /** The Hadoop confs that install [[LocalFs]] for `file:` paths under a
+    * `local` or `local[...]` master, empty for any other (see the object
+    * scaladoc). Every session this repo builds — shipped, measured and
+    * tested — takes them from here; each stays overridable like any
+    * conf. */
+  def localFs(master: String): Map[String, String] =
+    if (master == "local" || master.startsWith("local[")) Map(
+      "spark.hadoop.fs.file.impl" -> classOf[LocalFs.Checked].getName,
+      "spark.hadoop.fs.AbstractFileSystem.file.impl" ->
+        classOf[LocalFs.Context].getName)
+    else Map.empty
 
   /** Shuffle-partition derivation (see object scaladoc): explicit wins;
     * a local[N] master derives N; local[*]/local the processor count; a

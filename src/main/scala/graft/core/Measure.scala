@@ -11,10 +11,13 @@ object Measure {
 
   /** The measurement SparkSession every timed main uses: local[cpus],
     * cpus shuffle partitions, 8 MB splits (single-file test tables
-    * stay parallel), UTC, graft extensions, no UI. */
+    * stay parallel), UTC, graft extensions, no UI, and the shipped
+    * session's local filesystem (`GraftSession.localFs`). */
   def session(cpus: String): SparkSession = {
+    val master = s"local[$cpus]"
     val s = SparkSession.builder()
-      .master(s"local[$cpus]")
+      .master(master)
+      .config(GraftSession.localFs(master))
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.files.maxPartitionBytes", "8m")
       .config("spark.sql.session.timeZone", "UTC")

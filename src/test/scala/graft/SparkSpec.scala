@@ -3,11 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one per JVM — Test/fork := true). */
+/** Shared local session for all suites (one per JVM — Test/fork := true),
+  * on the shipped session's local filesystem (`GraftSession.localFs`). */
 object TestSpark {
   lazy val spark: SparkSession = {
+    val master = "local[4]"
     val s = SparkSession.builder()
-      .master("local[4]")
+      .master(master)
+      .config(graft.core.GraftSession.localFs(master))
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")

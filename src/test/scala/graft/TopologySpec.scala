@@ -114,6 +114,56 @@ class TopologySpec extends SparkSpec {
     } finally queries.foreach(_.stop())
   }
 
+  test("Main.awaitTopology: one branch throws → the other query is " +
+    "stopped and the exit code is nonzero (no half-alive topology)") {
+    val tmp = Files.createTempDirectory("cli_half").toString
+    Seq(1.0, 2.0, 3.0).toDF("value")
+      .write.mode("overwrite").parquet(s"$tmp/in")
+    val yaml =
+      s"""topics:
+         |  - name: values
+         |    kind: parquet
+         |    path: $tmp/in
+         |  - name: half_alive_ok
+         |    kind: memory
+         |  - name: half_alive_bad
+         |    kind: memory
+         |operators:
+         |  fine:
+         |    factory: graft.streaming.ops.FilterOp
+         |    sources: [values]
+         |    sinks: [half_alive_ok]
+         |    config:
+         |      filter_expr: "true"
+         |  broken:
+         |    factory: graft.streaming.ops.FilterOp
+         |    sources: [values]
+         |    sinks: [half_alive_bad]
+         |    config:
+         |      filter_expr: "raise_error('branch boom') IS NULL"
+         |config:
+         |  checkpoint: $tmp/ckpt
+         |""".stripMargin
+    val queries = Main.run(spark, Topology.parse(yaml), Map.empty)
+    try {
+      assert(queries.size == 2)
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.ExecutionContext.Implicits.global
+      import scala.concurrent.duration._
+      val code = Await.result(
+        Future(Main.awaitTopology(spark, queries)), 2.minutes)
+      assert(code != 0)
+      assert(queries.forall(!_.isActive))
+      val failed = queries.filter(_.exception.nonEmpty)
+      assert(failed.map(_.name) == Seq("half_alive_bad"))
+      assert(Iterator.iterate[Throwable](failed.head.exception.get)(_.getCause)
+        .takeWhile(_ != null)
+        .exists(e => String.valueOf(e.getMessage).contains("branch boom")))
+      // nothing to wait for: batch mode returns no queries
+      assert(Main.awaitTopology(spark, Nil) == 0)
+    } finally queries.foreach(_.stop())
+  }
+
   test("start_from 'last' on a kafka STREAM source is a config error " +
     "(side-input contract), not a silent 'latest'") {
     val yaml =
